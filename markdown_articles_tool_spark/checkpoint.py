@@ -14,12 +14,21 @@ no streaming concept).  Each transformer pass runs in two phases:
 * **Phase A (sharded, resumable)** — the expensive shard-local half
   (``pipeline.extract_pass_links``: extraction UDF, filters,
   distinct-URL fetch, per-link filename/status).  Work splits into
-  deterministic shards by ``pmod(xxhash64(url), n)``; each shard's
-  narrow link metadata + fetched bytes land under
-  ``stage/pass=P/{links,fetched}/shard=K`` followed by a commit marker
-  — marker-last gives idempotent commits on any filesystem (on Iceberg
-  this becomes a MERGE + snapshot).  Restart = anti-join of the shard
-  list against committed markers.
+  deterministic shards by ``pmod(xxhash64(url), n)``.  The pending
+  shards run in *waves* of ``SPARK_GRAFT_SHARD_WORKERS`` shards: one
+  ``extract_pass_links`` plan per wave over the wave's docs, so the
+  Python stages (extraction, fetch) run once per wave, not once per
+  shard — each Python task pays a fixed worker set-up cost whatever
+  its batch holds (~0.23 s of CPU per task on a 4-core local[4] box,
+  most of it pyspark re-invalidating its import caches).  Each
+  shard's staging is then cut from the wave's persisted frames (links
+  by recomputed shard id, fetched bytes by a left-semi join on the
+  shard's fetch keys) and lands under
+  ``stage/pass=P/{links,fetched}/shard=K`` followed by a per-shard
+  commit marker — marker-last gives idempotent commits on any
+  filesystem (on Iceberg this becomes a MERGE + snapshot).  Restart =
+  anti-join of the shard list against committed markers; a crash
+  mid-wave loses only the wave's uncommitted shards.
 * **Phase B (global, idempotent)** — the cheap global half
   (``pipeline.finish_pass``: content-dedup winners over the union of
   ALL shards' links, path algebra, per-doc fold + rewrite, sinks).
@@ -28,11 +37,15 @@ no streaming concept).  Each transformer pass runs in two phases:
   run **by construction** — there is no per-shard dedup scope to
   diverge (this closes r01's DIVERGENCES #12).  Phase B re-runs in
   full if its marker is missing; it is deterministic and overwrite-
-  idempotent.
+  idempotent.  It writes only tables something reads: the dedup
+  registrations only feed the next pass, and a single-pass run writes
+  ``images`` straight from ``images_out`` (already one row per
+  ``real_path``) instead of staging it for a cross-pass fold.
 
 Lineage parquet-style rows: per (pass, shard) JSON with n_docs +
 per-status link counts + wall seconds (the per-partition metrics
-table), plus a per-pass global row.
+table; a shard's ``wall_sec`` is its wave's wall time), plus a
+per-pass global row.
 """
 
 from __future__ import annotations
@@ -45,6 +58,7 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .config import env_int
 from .core.linkflow import DedupVariant, TransformConfig
 from .io_sinks import ParquetMarkerSink, TableSink
 from .pipeline import LINKMETA_COLS, extract_pass_links, finish_pass
@@ -86,12 +100,18 @@ def run_with_resume(
     runtime in this sandbox).
     """
     sink = sink or ParquetMarkerSink(out_dir)
+    wave_width = env_int('SPARK_GRAFT_SHARD_WORKERS', 4)
     ran, skipped = set(), set()
     finals_ran = False
+    single_pass = len(cfg.input_formats) == 1
 
     for i, fmt in enumerate(cfg.input_formats):
         last = i == len(cfg.input_formats) - 1
-        if sink.is_committed(f'pass={i}_final'):
+        # a single-pass run writes `images` inside its phase B, so a
+        # missing images_final marker reopens that phase B
+        if sink.is_committed(f'pass={i}_final') and (
+            not single_pass or sink.is_committed('images_final')
+        ):
             skipped.update(range(n_shards))
             continue
 
@@ -100,7 +120,8 @@ def run_with_resume(
             if i == 0
             else sink.read(spark, f'docs_pass/pass={i - 1}')
         )
-        sharded = cur_docs.withColumn('shard', F.pmod(F.xxhash64('url'), F.lit(n_shards)))
+        shard_of_url = F.pmod(F.xxhash64('url'), F.lit(n_shards))
+        sharded = cur_docs.withColumn('shard', shard_of_url)
 
         # ---------------------------------------------- phase A (sharded)
         todo = [k for k in range(n_shards) if not sink.is_committed(f'pass={i}_shard={k}')]
@@ -115,50 +136,48 @@ def run_with_resume(
                 for r in sharded.select('shard').groupBy('shard').count().collect()
             }
 
-        def _run_shard(k: int) -> None:
+        def _run_wave(wave: List[int]) -> None:
+            # one extract_pass_links plan over the wave's docs; each
+            # shard's staging is cut from its persisted frames
             t0 = time.time()
-            shard_docs = sharded.where(F.col('shard') == k).select('url', 'text')
+            wave_docs = sharded.where(F.col('shard').isin(*wave)).select('url', 'text')
             links, fetched, cached = extract_pass_links(
-                shard_docs, cfg, fmt=fmt, fetcher=fetcher, local_assets=local_assets
+                wave_docs, cfg, fmt=fmt, fetcher=fetcher, local_assets=local_assets
             )
-            links_name = f'stage/pass={i}/links/shard={k}'
-            sink.write(links, links_name)
-            # sha_hex staged WITH the content so phase B can pick a
-            # consistent deterministic winner per fetch_key
-            sink.write(fetched.select('fetch_key', 'sha_hex', 'content'),
-                       f'stage/pass={i}/fetched/shard={k}')
-            status_counts = {
-                r['status']: r['count'] for r in links.groupBy('status').count().collect()
-            }
-            _write_lineage(out_dir, f'shard-{i}-{k}.json', {
-                'pass': i,
-                'shard': k,
-                # footer-count of the staged parquet, not a recompute
-                'n_links': sink.read(spark, links_name).count(),
-                'n_docs': n_docs_by_shard.get(k, 0),
-                'status_counts': status_counts,
-                'wall_sec': round(time.time() - t0, 3),
-            })
-            sink.mark_committed(f'pass={i}_shard={k}')
-            for df in cached:
-                df.unpersist()
+            try:
+                status_counts = {k: {} for k in wave}
+                for r in links.groupBy(shard_of_url.alias('shard'), 'status').count().collect():
+                    status_counts[r['shard']][r['status']] = r['count']
+                # sha_hex staged WITH the content so phase B can pick a
+                # consistent deterministic winner per fetch_key
+                fetched = fetched.select('fetch_key', 'sha_hex', 'content')
+                for k in wave:
+                    shard_links = links.where(shard_of_url == k)
+                    sink.write(shard_links, f'stage/pass={i}/links/shard={k}')
+                    sink.write(
+                        fetched.join(shard_links.select('fetch_key'), 'fetch_key', 'left_semi'),
+                        f'stage/pass={i}/fetched/shard={k}',
+                    )
+                wall_sec = round(time.time() - t0, 3)
+            finally:
+                for df in cached:
+                    df.unpersist()
+            for k in wave:
+                _write_lineage(out_dir, f'shard-{i}-{k}.json', {
+                    'pass': i,
+                    'shard': k,
+                    'n_links': sum(status_counts[k].values()),
+                    'n_docs': n_docs_by_shard.get(k, 0),
+                    'status_counts': status_counts[k],
+                    'wall_sec': wall_sec,
+                })
+                sink.mark_committed(f'pass={i}_shard={k}')
 
-        # shards are independent by construction — submit their jobs
-        # from a bounded thread pool (Spark's scheduler runs concurrent
-        # jobs fine; at n_shards=64 a strictly sequential driver loop
-        # would leave scheduling bubbles between every pair of shards).
-        # Markers stay per-shard: a crash mid-pool commits exactly the
-        # shards that finished, resume picks up the rest.
-        workers = int(os.environ.get('SPARK_GRAFT_SHARD_WORKERS', '4'))
-        if len(todo) <= 1 or workers <= 1:
-            for k in todo:
-                _run_shard(k)
-        else:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=min(workers, len(todo))) as pool:
-                for _ in pool.map(_run_shard, todo):
-                    pass
+        # a wave runs the Python stages (extraction, fetch) once for all
+        # its shards; markers stay per shard, so a crash mid-pass
+        # commits exactly the shards of the waves that finished
+        for w in range(0, len(todo), wave_width):
+            _run_wave(todo[w:w + wave_width])
         ran.update(todo)
 
         # ---------------------------------------------- phase B (global)
@@ -194,14 +213,23 @@ def run_with_resume(
         if i > 0 and cfg.deduplication == DedupVariant.CONTENT_HASH:
             dedup_state = sink.read(spark, f'stage/pass={i - 1}/registrations')
         res = finish_pass(cur_docs, links_all, fetched_all, cfg, pass_idx=i, dedup_state=dedup_state)
-
-        if last:
-            sink.write(res.docs_out, 'docs')
-        else:
-            sink.write(res.docs_out.withColumnRenamed('text_out', 'text'), f'docs_pass/pass={i}')
-        sink.write(res.images_out.withColumn('_pass', F.lit(i)), f'stage/pass={i}/images')
-        if res.dedup_registrations is not None:
-            sink.write(res.dedup_registrations, f'stage/pass={i}/registrations')
+        try:
+            if last:
+                sink.write(res.docs_out, 'docs')
+            else:
+                sink.write(res.docs_out.withColumnRenamed('text_out', 'text'), f'docs_pass/pass={i}')
+            if single_pass:
+                # images_out has one row per real_path: for one pass
+                # the cross-pass first-write-wins fold is the identity
+                sink.write(res.images_out, 'images')
+            else:
+                sink.write(res.images_out.withColumn('_pass', F.lit(i)), f'stage/pass={i}/images')
+            # only pass i+1 reads pass i's registrations
+            if res.dedup_registrations is not None and not last:
+                sink.write(res.dedup_registrations, f'stage/pass={i}/registrations')
+        finally:
+            for df in res.cached:
+                df.unpersist()
         _write_lineage(out_dir, f'pass-{i}.json', {
             'pass': i,
             'n_docs_out': sink.read(
@@ -212,7 +240,10 @@ def run_with_resume(
         sink.mark_committed(f'pass={i}_final')
 
     # ------------------------------------- final images (cross-pass wins)
-    if finals_ran or not sink.is_committed('images_final'):
+    if single_pass:
+        if finals_ran:
+            sink.mark_committed('images_final')
+    elif finals_ran or not sink.is_committed('images_final'):
         imgs = sink.read(spark, 'stage/pass=*/images')
         # first write wins across passes (skip-if-exists,
         # image_downloader.py:287-289) — same fold as transform_documents

@@ -8,6 +8,7 @@ they stay driver-side here too and feed plain strings into the plan.
 
 from __future__ import annotations
 
+import os
 from pathlib import PurePosixPath
 from string import Template
 from typing import Dict, List, Optional, Union
@@ -28,6 +29,22 @@ def parse_skip_list(skip_list: Union[str, List[str], None]) -> frozenset:
                 return frozenset(s.strip() for s in f.readlines())
         return frozenset(s.strip() for s in skip_list.split(','))
     return frozenset(skip_list)
+
+
+def env_int(name: str, default: int, minimum: int = 1) -> int:
+    """Integer env knob, validated when read: unset → ``default``;
+    anything that is not an integer ``>= minimum`` is an error naming
+    the variable, not a silent fallback or a zero-width loop."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        value = int(raw)
+    except ValueError:
+        raise ValueError(f'{name}={raw!r}: expected an integer >= {minimum}') from None
+    if value < minimum:
+        raise ValueError(f'{name}={raw!r}: expected an integer >= {minimum}')
+    return value
 
 
 def resolve_templates(

@@ -153,8 +153,8 @@ class IcebergTableSink(TableSink):
         df = self.spark.createDataFrame([(marker,)], 'marker string')
         full = self._full('commits')
         # append() requires an existing table — create on first marker;
-        # a concurrent creator (thread-pooled shards) loses the race
-        # benignly and falls through to append
+        # a concurrent creator (another run on the same catalog) loses
+        # the race benignly and falls through to append
         if not self.spark.catalog.tableExists(full):
             try:
                 df.writeTo(full).create()

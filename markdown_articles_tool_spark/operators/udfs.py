@@ -10,6 +10,7 @@ implementation.
 
 from __future__ import annotations
 
+import functools
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -83,30 +84,44 @@ def _mime_gate_maps():
     return direct, suffix_pass, encodings
 
 
+def _sql_in(expr: str, values) -> str:
+    if not values:
+        return 'false'
+    quoted = ("'" + v.replace('\\', '\\\\').replace("'", "\\'") + "'" for v in values)
+    return f"{expr} IN ({', '.join(quoted)})"
+
+
+@functools.lru_cache(maxsize=1)
+def _mime_gate_sql() -> str:
+    """The gate as ONE SQL expression over the placeholder ``{url}``.
+    Built once per process: as Column algebra the ~320 literals cost
+    one py4j call each, and the bigger expression tree is re-analysed
+    by every later projection of the plan."""
+    direct, suffix_pass, encodings = _mime_gate_maps()
+    bn2 = r"regexp_replace(substring_index(regexp_replace({url}, '^[^/:]+:', ''), '/', -1), '^\\.+', '')"
+    last = f"concat('.', substring_index({bn2}, '.', -1))"
+    base_wo_last = rf"regexp_extract({bn2}, '^(.*)\\.[^.]*$', 1)"
+    prev = (f"CASE WHEN contains({base_wo_last}, '.') "
+            f"THEN concat('.', substring_index({base_wo_last}, '.', -1)) ELSE '' END")
+    return (
+        "CASE WHEN startswith(lower({url}), 'data:') THEN contains({url}, ',')"
+        f" WHEN NOT contains({bn2}, '.') THEN false"
+        f" WHEN {_sql_in(f'lower({last})', suffix_pass)} THEN true"
+        f" WHEN {_sql_in(last, encodings)} THEN {_sql_in(f'lower({prev})', direct)}"
+        f" ELSE {_sql_in(f'lower({last})', direct)} END"
+    )
+
+
 def mime_gate_col(download_url):
     """P3 as pure Column algebra: true iff ``guess_mime_type(url)`` is
     non-null.  Exact except for multi-level compression chains beyond
     one encoding suffix (e.g. ``a.tgz.gz``), which no image URL has.
+
+    ``download_url`` is a column name or a column reference; the gate
+    is one parsed SQL expression over it (``_mime_gate_sql``).
     """
-    direct, suffix_pass, encodings = _mime_gate_maps()
-    stripped = F.regexp_replace(download_url, '^[^/:]+:', '')
-    bn = F.substring_index(stripped, '/', -1)
-    bn2 = F.regexp_replace(bn, r'^\.+', '')
-    has_ext = bn2.contains('.')
-    last = F.concat(F.lit('.'), F.substring_index(bn2, '.', -1))
-    base_wo_last = F.regexp_extract(bn2, r'^(.*)\.[^.]*$', 1)
-    prev = F.when(
-        base_wo_last.contains('.'),
-        F.concat(F.lit('.'), F.substring_index(base_wo_last, '.', -1)),
-    ).otherwise(F.lit(''))
-    ll = F.lower(last)
-    return (
-        F.when(F.lower(download_url).startswith('data:'), download_url.contains(','))
-        .when(~has_ext, F.lit(False))
-        .when(ll.isin(*suffix_pass) if suffix_pass else F.lit(False), F.lit(True))
-        .when(last.isin(*encodings), F.lower(prev).isin(*direct))
-        .otherwise(ll.isin(*direct))
-    )
+    name = download_url if isinstance(download_url, str) else download_url._jc.toString()
+    return F.expr(_mime_gate_sql().replace('{url}', name))
 
 
 # sentinel: the reference raises KeyError on a missing content-type

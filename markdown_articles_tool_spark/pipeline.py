@@ -105,6 +105,10 @@ def extract_pass_links(
     fetcher = fetcher or model_fetcher
     extract = udfs.extract_md_links if fmt == 'md' else udfs.extract_html_links
 
+    base_url = (
+        base_url_col(F.col('url')) if cfg.derive_base_url_from_doc_url
+        else F.lit(cfg.paths.article_base_url)
+    )
     links = docs.select(
         'url',
         F.posexplode_outer(extract(F.col('text'))).alias('ord', 'lk'),
@@ -114,12 +118,8 @@ def extract_pass_links(
         F.col('lk.link').alias('src'),
         F.col('lk.w').alias('w'),
         F.col('lk.h').alias('h'),
+        base_url.alias('base_url'),
     ).where(F.col('src').isNotNull())
-
-    if cfg.derive_base_url_from_doc_url:
-        links = links.withColumn('base_url', base_url_col(F.col('url')))
-    else:
-        links = links.withColumn('base_url', F.lit(cfg.paths.article_base_url))
 
     # P2 skip list (exact-match set, image_downloader.py:262-269).
     # Small lists compile to an isin literal; above the threshold a
@@ -142,37 +142,32 @@ def extract_pass_links(
 
     # F9 relative→absolute resolution (image_downloader.py:194-210)
     article_dir = str(PurePosixPath(cfg.paths.article_file_path).parent)
-    links = links.withColumn(
-        'download_url',
+    download_url = (
         F.when(is_url_col(F.col('src')), F.col('src'))
         .when(F.col('base_url') != '', F.concat(F.col('base_url'), F.lit('/'), F.col('src')))
-        .otherwise(F.concat(F.lit(article_dir + '/'), F.col('src'))),
+        .otherwise(F.concat(F.lit(article_dir + '/'), F.col('src')))
     )
+    links = links.select('url', 'ord', 'src', 'w', 'h', 'base_url', skip.alias('_skip'),
+                         download_url.alias('download_url'))
 
     # P3 MIME gate — pure Column algebra (JVM-side); the python-exact
     # twin udfs.mime_type_of backs the oracle and the parity test
     gate_ok = (
-        F.lit(True) if cfg.download_incorrect_mime_types else udfs.mime_gate_col(F.col('download_url'))
+        F.lit(True) if cfg.download_incorrect_mime_types else udfs.mime_gate_col('download_url')
     )
-    links = links.withColumn(
-        'status0',
-        F.when(skip, F.lit('skipped')).when(~gate_ok, F.lit('mime_drop')),
-    )
-    if '_skipped' in links.columns:
-        links = links.drop('_skipped')
+    status0 = F.when(F.col('_skip'), F.lit('skipped')).when(~gate_ok, F.lit('mime_drop'))
+    links = links.select('url', 'ord', 'src', 'w', 'h', 'base_url', 'download_url',
+                         status0.alias('status0'),
+                         is_url_col(F.col('download_url')).alias('is_remote'))
 
     # S4: fetch each distinct URL once cluster-wide
-    links = links.withColumn('is_remote', is_url_col(F.col('download_url')))
-    links = links.withColumn(
-        'fetch_key',
+    links = links.select('*', F.when(
+        F.col('status0').isNull(),
         F.when(
-            F.col('status0').isNull(),
-            F.when(
-                F.col('is_remote'),
-                F.element_at(F.split(F.col('download_url'), r'\s+'), 1),
-            ).otherwise(F.col('download_url')),
-        ),
-    )
+            F.col('is_remote'),
+            F.element_at(F.split(F.col('download_url'), r'\s+'), 1),
+        ).otherwise(F.col('download_url')),
+    ).alias('fetch_key'))
     # the links table feeds the fetch scan(s) plus the main join —
     # persist the (still content-free, narrow) projection so the
     # extraction UDF runs once per pass, not per consumer
@@ -211,16 +206,14 @@ def extract_pass_links(
         )
     else:
         filename0 = F.col('filename_remote')
-    links = links.withColumn('filename0', filename0)
-
-    links = links.withColumn(
-        'status',
+    links = links.select('*', filename0.alias('filename0'))
+    links = links.select('*', (
         F.when(F.col('status0').isNotNull(), F.col('status0'))
         .when(F.col('sha_hex').isNull() | (F.col('fetch_status') >= 400), F.lit('error'))
         .when(F.col('filename0') == udfs.FILENAME_KEYERROR, F.lit('error'))
         .when(F.col('filename0').isNull(), F.lit('no_filename'))
-        .otherwise(F.lit('ok')),
-    )
+        .otherwise(F.lit('ok'))
+    ).alias('status'))
 
     filename = F.col('filename0')
     if cfg.replace_image_names:
@@ -230,16 +223,17 @@ def extract_pass_links(
             F.col('filename0').contains('.'), F.substring_index(F.col('filename0'), '.', -1)
         ).otherwise(F.lit('None'))
         filename = F.concat(F.col('sha_hex'), F.lit('.'), ext)
-    links = links.withColumn('filename1', F.when(F.col('status') == 'ok', filename))
-
-    links = links.withColumn('need_rescaling', F.col('w').isNotNull() | F.col('h').isNotNull())
+    derived = {
+        'filename1': F.when(F.col('status') == 'ok', filename),
+        'need_rescaling': F.col('w').isNotNull() | F.col('h').isNotNull(),
+    }
 
     # second materialization point: the dedup-winners branch and the
     # main branch both consume the joined+derived links — without this,
     # the meta join and its upstream UDFs execute once per branch
     import os as _os
 
-    links = links.select(*LINKMETA_COLS)
+    links = links.select(*(derived[c].alias(c) if c in derived else c for c in LINKMETA_COLS))
     if _os.environ.get('SPARK_GRAFT_NO_LINKMETA_PERSIST', '0') != '1':
         links = links.persist()
     return links, fetched, (links_pre, links, fetched)
