@@ -18,9 +18,12 @@ no streaming concept).  Each transformer pass runs in two phases:
   shards run in *waves* of ``SPARK_GRAFT_SHARD_WORKERS`` shards: one
   ``extract_pass_links`` plan per wave over the wave's docs, so the
   Python stages (extraction, fetch) run once per wave, not once per
-  shard — each Python task pays a fixed worker set-up cost whatever
-  its batch holds (~0.23 s of CPU per task on a 4-core local[4] box,
-  most of it pyspark re-invalidating its import caches).  Each
+  shard — each Python task pays a fixed set-up cost whatever its
+  batch holds, and each Spark job its own planning and scheduling.
+  (The largest per-task share, ~0.11 s of CPU on a 4-core local[4]
+  box spent by pyspark re-reading its zip archives, is gone since
+  ``session.get_spark`` forks workers from ``worker_daemon``; waves
+  still cut the task and job counts.)  Each
   shard's staging is then cut from the wave's persisted frames (links
   by recomputed shard id, fetched bytes by a left-semi join on the
   shard's fetch keys) and lands under

@@ -4,6 +4,13 @@ Tuned for correctness-critical determinism plus the scale posture from
 SURVEY.md §4: AQE on (skew joins, coalesced shuffle), Arrow on (every
 row-level op here is a pandas UDF), and shuffle partitions sized for
 the local harness (on a real cluster these come from spark-submit).
+
+The session also keeps compiled code warm across jobs: a generated-class
+cache large enough for a whole run's plans (so repeated plan shapes are
+not recompiled and re-JITted), and Python workers forked from
+``worker_daemon``, which stops every task from re-reading pyspark's zip
+archives.  ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_SHUFFLE_PARTITIONS``
+are validated when read (``config.env_int``).
 """
 
 from __future__ import annotations
@@ -12,15 +19,28 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .config import env_int
+
+#: ``spark.sql.codegen.cache.maxEntries`` (Spark's default is 100).
+#: Measured with CodegenMetrics on local[4], one process running a
+#: perfbench workload's set-up and two timed iterations: the
+#: checkpointed transform needs 137 distinct generated classes and the
+#: curation chain 260; with the default cache Spark compiled 475 and
+#: 742, so 71% and 65% were recompiles of evicted classes (~180 Janino
+#: compiles per repeated iteration, each class then re-JITted from the
+#: interpreter up).  1000 is ~4x the larger working set; Metaspace at
+#: the end of a curation run was 168 MB with either cache size.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(
     app_name: str = 'markdown-articles-tool-spark',
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get('SPARK_GRAFT_MASTER', f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+    master = master or os.environ.get('SPARK_GRAFT_MASTER') or f"local[{env_int('SPARK_GRAFT_CPUS', 32)}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get('SPARK_GRAFT_SHUFFLE_PARTITIONS', '32'))
+        shuffle_partitions = env_int('SPARK_GRAFT_SHUFFLE_PARTITIONS', 32)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -76,5 +96,9 @@ def get_spark(
             os.environ.get('SPARK_GRAFT_CACHE_COMPRESS', 'false'),
         )
         .config('spark.sql.session.timeZone', 'UTC')
+        .config('spark.sql.codegen.cache.maxEntries', str(CODEGEN_CACHE_ENTRIES))
+        # workers fork from a daemon that skips re-reading unchanged
+        # import archives before every task (see worker_daemon)
+        .config('spark.python.daemon.module', 'markdown_articles_tool_spark.worker_daemon')
     )
     return builder.getOrCreate()

@@ -42,26 +42,28 @@ finds ``https://example.com/a?a=1&b=2``'s records) and the
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..config import env_int
 
 KEY_COLS = ('surt', 'file_name', 'ord')
 
-#: Default shard sizing for ``write_cdx_index(n_shards=None)``: rows
+#: Default shard sizing for ``write_cdx_index(n_shards=None)``
+#: (``SPARK_GRAFT_CDX_SHARD_ROWS`` overrides it when set): rows
 #: per shard, not a core-count constant — output file count must track
 #: DATA size, not cluster width (a 6k-row bench index in 32 shards of
 #: 200 rows is as wrong as a 10 TB index in 32 shards of 300 GB).
 #: 250k CDX rows is a conservative stand-in for the "few hundred MB a
 #: shard" production rule; real deployments size explicitly.
-_TARGET_ROWS_PER_SHARD = int(os.environ.get('SPARK_GRAFT_CDX_SHARD_ROWS', '250000'))
+_TARGET_ROWS_PER_SHARD = 250_000
 
 
 def write_cdx_index(cdx: DataFrame, path: str, n_shards: int | None = None) -> None:
     """Write the range-partitioned, SURT-sorted shard layout plus the
     ``_boundaries`` table.  ``n_shards`` defaults to a SIZE-derived
-    count (``ceil(rows / _TARGET_ROWS_PER_SHARD)``, capped at the
-    cluster parallelism) — the count costs one pass over ``cdx``
+    count (``ceil(rows / SPARK_GRAFT_CDX_SHARD_ROWS)``, default
+    ``_TARGET_ROWS_PER_SHARD``, capped at the cluster parallelism) —
+    the count costs one pass over ``cdx``
     (cheap when the caller persists it, as the entry queries do);
     production runs with a known corpus pass ``n_shards`` explicitly
     and skip it."""
@@ -69,9 +71,10 @@ def write_cdx_index(cdx: DataFrame, path: str, n_shards: int | None = None) -> N
     if n_shards:
         n = n_shards
     else:
+        rows_per_shard = env_int('SPARK_GRAFT_CDX_SHARD_ROWS', _TARGET_ROWS_PER_SHARD)
         rows = cdx.count()
         n = max(1, min(spark.sparkContext.defaultParallelism,
-                       -(-rows // _TARGET_ROWS_PER_SHARD)))
+                       -(-rows // rows_per_shard)))
     (
         cdx.repartitionByRange(n, *[F.col(c) for c in KEY_COLS])
         .sortWithinPartitions(*KEY_COLS)

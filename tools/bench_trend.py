@@ -2,8 +2,12 @@
 """Per-query bench trend across rounds: prints r1→rN deltas so plan
 regressions surface at commit time, not judge time.
 
-    python tools/bench_trend.py              # BENCH_r*.json series
+    python tools/bench_trend.py              # BENCH_rNN.json series
     python tools/bench_trend.py extra.json   # ...plus ad-hoc runs
+
+The series is the plain ``BENCH_rNN.json`` files in round order;
+suffixed variants of a round (``BENCH_r07_control.json``) are not
+rounds and are left out unless passed as extra files.
 
 A cell shows seconds; the last column flags the latest-vs-previous
 delta (▲ >25% slower, ▼ >25% faster).  Also compares docs_per_sec.
@@ -20,10 +24,12 @@ import sys
 
 def load_series(extra: list) -> list:
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    paths = sorted(
-        glob.glob(os.path.join(root, 'BENCH_r*.json')),
-        key=lambda p: int(re.search(r'r(\d+)', os.path.basename(p)).group(1)),
-    ) + extra
+    rounds = {}
+    for p in glob.glob(os.path.join(root, 'BENCH_r*.json')):
+        m = re.fullmatch(r'BENCH_r(\d+)\.json', os.path.basename(p))
+        if m:
+            rounds[int(m.group(1))] = p
+    paths = [rounds[r] for r in sorted(rounds)] + extra
     series = []
     for p in paths:
         with open(p) as f:
