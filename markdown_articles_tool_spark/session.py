@@ -7,15 +7,17 @@ the local harness (on a real cluster these come from spark-submit).
 
 The session also keeps compiled code warm across jobs: a generated-class
 cache large enough for a whole run's plans (so repeated plan shapes are
-not recompiled and re-JITted), and Python workers forked from
-``worker_daemon``, which stops every task from re-reading pyspark's zip
-archives.  ``SPARK_GRAFT_CPUS`` and ``SPARK_GRAFT_SHUFFLE_PARTITIONS``
-are validated when read (``config.env_int``).
+not recompiled and re-JITted), and, on local masters, Python workers
+forked from ``worker_daemon``, which stops every task from re-reading
+pyspark's zip archives.  ``SPARK_GRAFT_CPUS`` (an integer >= 1, or
+``*`` for every core) and ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` are
+validated when read (``config.env_int``).
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -30,6 +32,10 @@ from .config import env_int
 #: compiles per repeated iteration, each class then re-JITted from the
 #: interpreter up).  1000 is ~4x the larger working set; Metaspace at
 #: the end of a curation run was 168 MB with either cache size.
+#: It pays only where plan shapes repeat in one session: a single cold
+#: job compiled the same ~122 (fresh transform) and ~190 (curation)
+#: classes with either size, while a restart in the fresh run's
+#: session compiled 85-99 with the default and 2-13 with this one.
 CODEGEN_CACHE_ENTRIES = 1000
 
 
@@ -38,7 +44,10 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get('SPARK_GRAFT_MASTER') or f"local[{env_int('SPARK_GRAFT_CPUS', 32)}]"
+    master = master or os.environ.get('SPARK_GRAFT_MASTER')
+    if not master:
+        cpus = '*' if os.environ.get('SPARK_GRAFT_CPUS') == '*' else env_int('SPARK_GRAFT_CPUS', 32)
+        master = f'local[{cpus}]'
     if shuffle_partitions is None:
         shuffle_partitions = env_int('SPARK_GRAFT_SHUFFLE_PARTITIONS', 32)
     builder = (
@@ -97,8 +106,14 @@ def get_spark(
         )
         .config('spark.sql.session.timeZone', 'UTC')
         .config('spark.sql.codegen.cache.maxEntries', str(CODEGEN_CACHE_ENTRIES))
-        # workers fork from a daemon that skips re-reading unchanged
-        # import archives before every task (see worker_daemon)
-        .config('spark.python.daemon.module', 'markdown_articles_tool_spark.worker_daemon')
     )
+    if master.startswith('local'):
+        # Python workers run on this host: fork them from a daemon that
+        # skips re-reading unchanged import archives before every task
+        # (see worker_daemon), with this package on their path wherever
+        # the driver was started.  A cluster's executors see the
+        # package only once a task has unpacked its --py-files, after
+        # the daemon starts, so they keep pyspark's own daemon.
+        builder = builder.config('spark.python.daemon.module', f'{__package__}.worker_daemon').config(
+            'spark.executorEnv.PYTHONPATH', str(Path(__file__).resolve().parent.parent))
     return builder.getOrCreate()

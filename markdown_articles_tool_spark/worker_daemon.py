@@ -1,16 +1,17 @@
 """Python worker daemon: pyspark's own daemon, minus the per-task
 re-reads of the zip archives pyspark is imported from.
 
-``session.get_spark`` points ``spark.python.daemon.module`` here, so
-Spark starts this module once per executor and forks every Python
-worker from it.  Before each task, pyspark
+For local masters ``session.get_spark`` points
+``spark.python.daemon.module`` here (and puts this package on the
+workers' path), so Spark starts this module once and forks every
+Python worker from it.  Before each task, pyspark
 (``worker_util.setup_spark_files``) calls ``importlib.invalidate_caches()``.
 On Python < 3.13, ``zipimporter.invalidate_caches`` eagerly re-reads
 the archive's whole central directory, once per zipimporter, and a
 worker holds about 16 of them: pyspark.zip 12 times (one per
 subpackage), py4j's zip and the spark-core jar twice each.  That was
-~0.11 s of CPU per Python task on a 4-core local[4] box, most of a
-small task's worker time.
+~0.11 s of CPU per Python task (CPython 3.11.7, local[4] on a 4-core
+box), most of a small task's worker time.
 
 Here an importer re-reads its archive only when the archive's
 ``(inode, size, mtime_ns)`` differs from the stamp taken just before

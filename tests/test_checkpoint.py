@@ -19,8 +19,6 @@ from markdown_articles_tool_spark.checkpoint import (
 from markdown_articles_tool_spark.core.linkflow import DedupVariant, TransformConfig
 from markdown_articles_tool_spark.io_sinks import ParquetMarkerSink
 from markdown_articles_tool_spark.pipeline import transform_documents
-from markdown_articles_tool_spark.session import get_spark
-from markdown_articles_tool_spark.sources.cdxindex import write_cdx_index
 
 
 @pytest.fixture()
@@ -372,20 +370,3 @@ def test_shard_workers_knob_is_validated(spark, docs, tmp_path, monkeypatch, val
     monkeypatch.setenv('SPARK_GRAFT_SHARD_WORKERS', value)
     with pytest.raises(ValueError, match='SPARK_GRAFT_SHARD_WORKERS'):
         run_with_resume(spark, docs, TransformConfig(skip_all_errors=True), str(tmp_path / 'o'))
-
-
-@pytest.mark.parametrize('knob', ['SPARK_GRAFT_CPUS', 'SPARK_GRAFT_SHUFFLE_PARTITIONS'])
-@pytest.mark.parametrize('value', ['0', '-2', 'four', '2.5', '*'])
-def test_session_knobs_are_validated(monkeypatch, knob, value):
-    monkeypatch.delenv('SPARK_GRAFT_MASTER', raising=False)
-    monkeypatch.setenv(knob, value)
-    with pytest.raises(ValueError, match=knob):
-        get_spark()
-
-
-@pytest.mark.parametrize('value', ['0', '-2', 'four', ''])
-def test_cdx_shard_rows_knob_is_validated(spark, tmp_path, monkeypatch, value):
-    monkeypatch.setenv('SPARK_GRAFT_CDX_SHARD_ROWS', value)
-    cdx = spark.createDataFrame([('a', 'f', 0)], 'surt string, file_name string, ord int')
-    with pytest.raises(ValueError, match='SPARK_GRAFT_CDX_SHARD_ROWS'):
-        write_cdx_index(cdx, str(tmp_path / 'cdx'))

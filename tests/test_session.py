@@ -1,19 +1,25 @@
 """The session keeps compiled code warm: generated classes survive
 between jobs, and Python workers do not re-read unchanged import
-archives before every task."""
+archives before every task.  Its env knobs are validated when read."""
 
 import importlib
 import os
+import subprocess
 import sys
+import textwrap
 import zipfile
 import zipimport
 
 import pandas as pd
 import pytest
+from pyspark.sql import SparkSession
 
 from markdown_articles_tool_spark import corpus, worker_daemon
 from markdown_articles_tool_spark.checkpoint import run_with_resume
 from markdown_articles_tool_spark.core.linkflow import TransformConfig
+from markdown_articles_tool_spark.session import get_spark
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 eager_zip_invalidation = pytest.mark.skipif(
     sys.version_info >= (3, 13), reason='zipimporter invalidation is lazy from Python 3.13 on')
@@ -93,3 +99,56 @@ def test_invalidate_rereads_only_a_changed_archive(tmp_path, monkeypatch):
     finally:
         sys.modules.pop('graft_zip_a', None)
         sys.modules.pop('graft_zip_b', None)
+
+
+@pytest.fixture()
+def builder_options(monkeypatch):
+    """``get_spark`` returns the options it would build a session from."""
+    monkeypatch.setattr(SparkSession.Builder, 'getOrCreate', lambda self: dict(self._options))
+    monkeypatch.delenv('SPARK_GRAFT_MASTER', raising=False)
+    monkeypatch.delenv('SPARK_GRAFT_CPUS', raising=False)
+    monkeypatch.delenv('SPARK_GRAFT_SHUFFLE_PARTITIONS', raising=False)
+
+
+def test_only_local_masters_use_the_worker_daemon(builder_options):
+    local = get_spark(master='local[2]')
+    assert local['spark.python.daemon.module'] == 'markdown_articles_tool_spark.worker_daemon'
+    assert local['spark.executorEnv.PYTHONPATH'] == ROOT
+    for master in ('spark://host:7077', 'yarn', 'k8s://https://host:6443'):
+        opts = get_spark(master=master)
+        assert 'spark.python.daemon.module' not in opts
+        assert 'spark.executorEnv.PYTHONPATH' not in opts
+
+
+def test_workers_import_the_daemon_from_any_working_directory(tmp_path):
+    # a driver started outside the repo: the workers still find the package
+    script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {ROOT!r})
+        from markdown_articles_tool_spark.session import get_spark
+
+        spark = get_spark(master='local[1]', shuffle_partitions=1)
+        print(spark.range(3).mapInPandas(lambda it: it, 'id long').count())
+        spark.stop()
+    """)
+    env = {k: v for k, v in os.environ.items() if k != 'PYTHONPATH'}
+    out = subprocess.run([sys.executable, '-c', script], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == ['3']
+
+
+@pytest.mark.parametrize('knob', ['SPARK_GRAFT_CPUS', 'SPARK_GRAFT_SHUFFLE_PARTITIONS'])
+@pytest.mark.parametrize('value', ['0', '-2', 'four', '2.5', ''])
+def test_session_knobs_are_validated(builder_options, monkeypatch, knob, value):
+    monkeypatch.setenv(knob, value)
+    with pytest.raises(ValueError, match=knob):
+        get_spark()
+
+
+def test_star_cpus_uses_every_core(builder_options, monkeypatch):
+    monkeypatch.setenv('SPARK_GRAFT_CPUS', '*')
+    assert get_spark()['spark.master'] == 'local[*]'
+    monkeypatch.setenv('SPARK_GRAFT_SHUFFLE_PARTITIONS', '*')
+    with pytest.raises(ValueError, match='SPARK_GRAFT_SHUFFLE_PARTITIONS'):
+        get_spark()

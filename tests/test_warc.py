@@ -760,6 +760,15 @@ class TestCdxShardedIndex:
         for (l1, h1), (l2, h2) in zip(bounds, bounds[1:]):
             assert l1 <= h1 <= l2 <= h2
 
+    @pytest.mark.parametrize('value', ['0', '-2', 'four', ''])
+    def test_shard_rows_knob_is_validated(self, spark, tmp_path, monkeypatch, value):
+        from markdown_articles_tool_spark.sources.cdxindex import write_cdx_index
+
+        monkeypatch.setenv('SPARK_GRAFT_CDX_SHARD_ROWS', value)
+        cdx = spark.createDataFrame([('a', 'f', 0)], 'surt string, file_name string, ord int')
+        with pytest.raises(ValueError, match='SPARK_GRAFT_CDX_SHARD_ROWS'):
+            write_cdx_index(cdx, str(tmp_path / 'cdx'))
+
     def _build(self, spark, tmp_path_factory, n=60, n_shards=4):
         from markdown_articles_tool_spark.sources.cdxindex import write_cdx_index
         from markdown_articles_tool_spark.sources.warc import read_warc_cdx
